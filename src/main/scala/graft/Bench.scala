@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerUnpersistRDD}
+import graft.obs.EngineListener
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Emits ONE JSON metric line to stdout and also
@@ -17,6 +17,10 @@ import org.apache.spark.sql.SparkSession
   * itself rather than only in session notes.
   */
 object Bench {
+  /** Timed runs per query: `SPARK_GRAFT_RUNS`, default 2. */
+  def runs(env: Map[String, String] = sys.env): Int =
+    GraftSession.positiveInt(env, "SPARK_GRAFT_RUNS", 2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // staged artifacts ride the cross-invocation StageCache (r17,
@@ -25,109 +29,14 @@ object Bench {
     // "cache" field below makes a slow staging number self-adjudicating
     // (hits can only be IO/contention, never rebuild regressions)
     graft.operators.StageCache.enableDefault()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(2).max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r19: the suite runs 180 distinct queries x N runs; each compiles
-      // ~5-10 whole-stage-codegen classes, so the default 100-entry
-      // Janino class cache thrashes and even a query's SECOND run
-      // recompiles every generated class. Scale-neutral (the cache holds
-      // compiled classes, a few MB of driver metaspace); any production
-      // driver serving a diverse query mix wants the same headroom.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // job-count probe: incremented on every job start; snapshotted
-    // around each timed run so the artifact shows action counts
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+    val runs = Bench.runs()
+    val spark = GraftSession.build()
     // executor-metric probes (r11 verdict #1a): the r11 artifact could
     // not adjudicate a 52.6->80.0 s suite drift because it recorded
     // wall and job counts but nothing about WHAT the tasks did. These
-    // counters make shuffle volume, spill, task GC, and cached-block
-    // eviction per-run facts of the artifact. All are monotonic sums
-    // fed by the async listener bus; snapshots drain the bus first
-    // (GraftCoreBridge) so a task's bytes land in its own query's
-    // window, not the next one's.
-    object M {
-      import java.util.concurrent.atomic.AtomicLong
-      val shufR = new AtomicLong(0L)   // shuffle read bytes
-      val shufW = new AtomicLong(0L)   // shuffle write bytes
-      val spillM = new AtomicLong(0L)  // memory bytes spilled
-      val spillD = new AtomicLong(0L)  // disk bytes spilled
-      val gcMs = new AtomicLong(0L)    // task JVM GC time, ms
-      val evict = new AtomicLong(0L)   // cached RDD blocks demoted memory->disk
-      // cached RDD blocks dropped entirely — INCLUDING voluntary
-      // unpersist()/localCheckpoint scratch release (pervasive in the
-      // betweenness and funnel code), so a nonzero value alone is NOT a
-      // memory-pressure signal (review finding r13). Adjudication rule,
-      // ONE direction only: unpersist=0 && removed>0 proves an
-      // involuntary drop. The converse does NOT hold — unpersist counts
-      // RDDs (not blocks) and fires for ContextCleaner's GC-driven
-      // cleanups as well as explicit calls, so a window with both
-      // counters nonzero may still hide pressure-driven loss among the
-      // voluntary releases; treat it as inconclusive, not clean.
-      val removed = new AtomicLong(0L)
-      val unpersist = new AtomicLong(0L) // unpersistRDD events (explicit + cleaner)
-      def snapshot(): Array[Long] = {
-        org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-        Array(shufR.get, shufW.get, spillM.get, spillD.get, gcMs.get,
-          evict.get, removed.get, unpersist.get)
-      }
-    }
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        jobCounter.incrementAndGet(); ()
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val tm = te.taskMetrics
-        if (tm != null) {
-          M.shufR.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-          M.shufW.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-          M.spillM.addAndGet(tm.memoryBytesSpilled)
-          M.spillD.addAndGet(tm.diskBytesSpilled)
-          M.gcMs.addAndGet(tm.jvmGCTime)
-          ()
-        }
-      }
-      // blocks currently memory-resident: a disk-without-memory update
-      // is a DEMOTION only if the block was in memory before — an
-      // initial DISK_ONLY store (forwardLevels' fan-out frames at large
-      // seedRows*edgeRows) posts the identical level and must NOT count
-      // as eviction, or the drift-adjudication methodology reads
-      // intentional disk staging as memory pressure (review finding r12)
-      private val inMemory = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      override def onBlockUpdated(bu: SparkListenerBlockUpdated): Unit = {
-        val info = bu.blockUpdatedInfo
-        if (info.blockId.isRDD) {
-          val key = info.blockId.name
-          val lvl = info.storageLevel
-          if (lvl.isValid && lvl.useMemory) { inMemory.add(key); () }
-          else {
-            val wasInMemory = inMemory.remove(key)
-            // full drop = recompute next use; memory->disk demotion =
-            // the block survives but every consumer now pays disk
-            // bandwidth (the suspected-then-refuted r11 mechanism)
-            if (!lvl.isValid) M.removed.incrementAndGet()
-            else if (wasInMemory && lvl.useDisk && info.diskSize > 0L)
-              M.evict.incrementAndGet()
-            ()
-          }
-        }
-      }
-      // voluntary-release marker for the removed counter above; posted
-      // for explicit RDD.unpersist() AND ContextCleaner GC-driven
-      // cleanup — see M.removed's one-directional adjudication rule
-      override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit = {
-        M.unpersist.incrementAndGet(); ()
-      }
-    })
+    // make shuffle volume, spill, task GC, cached-block eviction and
+    // the job count per-run facts of the artifact.
+    val metrics = EngineListener.attach(spark)
     // untimed warmup: JIT + codegen + parquet footer caches otherwise land
     // on whichever query happens to run first (measured: ~3-6 s of the
     // first query's wall time is one-time JVM warmup, not query cost)
@@ -189,14 +98,13 @@ object Bench {
     final case class TierRec(name: String, sec: Double, err: Option[String],
                              m: Array[Long], cache: String)
     def runTier(name: String)(body: => Unit): TierRec = {
-      val m0 = M.snapshot()
+      val m0 = metrics.snapshot()
       val t0 = System.nanoTime()
       val err =
         try { body; None }
         catch { case t: Throwable => Some(t.toString.take(200)) }
       val sec = (System.nanoTime() - t0) / 1e9
-      val m1 = M.snapshot()
-      TierRec(name, sec, err, m1.zip(m0).map { case (a, b) => a - b }, "")
+      TierRec(name, sec, err, EngineListener.delta(metrics.snapshot(), m0), "")
     }
     // bench tier -> StageCache entry prefixes, for post-phase event
     // attribution (entry names are the frame/dir tier strings passed
@@ -223,7 +131,7 @@ object Bench {
     // loop should not pay the unrelated tier builds; first-touch
     // staging inside the selected query is the accepted dev tradeoff
     val stagingT0 = System.nanoTime()
-    val staging: Seq[(String, Double, Option[String], Array[Long], String)] =
+    val staging: Seq[TierRec] =
       if (only.isDefined) Nil
       else {
         graft.operators.StageCache.drainEvents() // scope events to the phase
@@ -298,21 +206,13 @@ object Bench {
             "band_index" -> (() => {
               graft.dedup.BandIndex.stagedBaseIndex(spark, sfDir); ()
             })))
-        // r19: default = ALL chains in flight (6). The guide's §2.6
-        // "2-3 jobs" sizing is for jobs that saturate the cluster;
-        // these tiers alternate driver-side single-threaded work with
-        // short bursts, so at PAR=3 two long chains queued behind each
-        // other and the phase wall measured 28.3 s vs 14.7 s at
-        // PAR=6 (cold, quiet, sf0.1/32 cores — see OPTIMIZATION_r19).
-        // The FIFO scheduler back-fills either way; the knob stays
-        // env-overridable (SPARK_GRAFT_STAGE_PAR=1 restores strictly
-        // sequential tiers for A/B measurement).
-        // tolerant parse (ADVICE r18): a stray non-numeric value must
-        // not crash the bench before any measurement runs
-        val stagePar = sys.env.get("SPARK_GRAFT_STAGE_PAR")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-          .getOrElse(chains.size).max(1)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(stagePar,
+        // r19: every chain in flight. The guide's §2.6 "2-3 jobs"
+        // sizing is for jobs that saturate the cluster; these tiers
+        // alternate driver-side single-threaded work with short bursts,
+        // so with 3 threads two long chains queued behind each other and
+        // the phase wall measured 28.3 s vs 14.7 s with 6 (cold, quiet,
+        // sf0.1/32 cores — see OPTIMIZATION_r19).
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size,
           r => { val t = new Thread(r, "graft-staging"); t.setDaemon(true); t })
         try {
           val futs = chains.map(chain => pool.submit(
@@ -328,30 +228,16 @@ object Bench {
             // never silently drop an event for a cache entry no tier
             // claims — surface it as a zero-cost synthetic tier
             (if (events.contains("(unattributed)"))
-               Seq(TierRec("(unattributed)", 0.0, None, Array.fill(8)(0L), ""))
+               Seq(TierRec("(unattributed)", 0.0, None, EngineListener.zero, ""))
              else Nil)
           ordered.map { r =>
-            val cache = events.getOrElse(r.name, Seq.empty)
+            r.copy(cache = events.getOrElse(r.name, Seq.empty)
               .groupBy(_._2).toSeq.sortBy(_._1)
-              .map { case (what, es) => s"$what:${es.size}" }.mkString(",")
-            (r.name, r.sec, r.err, r.m, cache)
+              .map { case (what, es) => s"$what:${es.size}" }.mkString(","))
           }
         } finally pool.shutdown()
       }
     val stagingWallSec = (System.nanoTime() - stagingT0) / 1e9
-    // dev-only staging A/B loop (driver never sets it; unset = no
-    // behavior change): print the staging phase wall + per-tier spans
-    // and exit before the query phase, so staging-chain experiments
-    // don't pay 180 queries per data point
-    if (sys.env.contains("SPARK_GRAFT_STAGE_ONLY")) {
-      val tiers = staging.map { case (k, v, err, _, _) =>
-        s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}${err.map(e => s""","${k}_err":true""").getOrElse("")}"""
-      }.mkString("{", ",", "}")
-      println(s"""{"staging_sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(stagingWallSec))},"tiers":$tiers}""")
-      System.out.flush()
-      try spark.stop() catch { case _: Throwable => () }
-      System.exit(0)
-    }
     // truncate without splitting a surrogate pair: a dangling high
     // surrogate would make the JSON string invalid for strict parsers
     def safeTake(s: String, n: Int): String = {
@@ -365,23 +251,22 @@ object Bench {
     // whichever absorbed residual session effects — and the artifact
     // could not show it. The order is recorded in the emitted line.
     // one timed execution: wall, job count, error, and the executor-
-    // metric delta over the run (field order = metricFields below)
+    // metric delta over the run (field order = EngineListener.Fields)
     final case class Run(sec: Double, jobs: Long, err: Option[String], m: Array[Long])
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Run = {
       // settle the heap between runs so an allocation-heavy query's
       // garbage doesn't tax its successors' measurements
       System.gc()
-      val m0 = M.snapshot()
-      val j0 = jobCounter.get()
+      metrics.drainJobs()
+      val m0 = metrics.snapshot()
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).count(); None }
         catch { case t: Throwable => Some(safeTake(t.toString, 200)) }
       val sec = (System.nanoTime() - t0) / 1e9
-      val jobs = jobCounter.get() - j0
-      val m1 = M.snapshot()
-      Run(sec, jobs, err, m1.zip(m0).map { case (a, b) => a - b })
+      val jobs = metrics.drainJobs().size.toLong
+      Run(sec, jobs, err, EngineListener.delta(metrics.snapshot(), m0))
     }
     val firstPass = SparkEntry.allDefs
       .map(d => d.name -> d.fn)
@@ -437,23 +322,15 @@ object Bench {
       .mkString("{", ",", "}")
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def r1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     // all per-run wall times (full artifact only): warmup-vs-steady is
     // visible per query instead of being erased by the min
     val ra = results.map { case (k, (_, all)) =>
       s"\"" + k + "\":" + all.map(r => r3(r.sec)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // per-run executor metrics (full artifact only): each query maps to
-    // an array of per-run records, record field order = metricFields.
-    // Byte fields are MB (1 decimal), gc is ms, block fields are counts.
-    val metricFields = Seq("shuffle_read_mb", "shuffle_write_mb",
-      "spill_mem_mb", "spill_disk_mb", "gc_ms", "evicted_blocks",
-      "removed_blocks", "unpersist_rdds")
-    def metricRec(m: Array[Long]): String = {
-      val mb = m.take(4).map(b => r1(b / 1048576.0))
-      (mb ++ m.drop(4).map(_.toString)).mkString("[", ",", "]")
-    }
+    // an array of per-run records, field order = EngineListener.Fields
+    def metricRec(m: Array[Long]): String =
+      EngineListener.formatted(m).mkString("[", ",", "]")
     val em = results.map { case (k, (_, all)) =>
       s"\"" + k + "\":" + all.map(r => metricRec(r.m)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -463,16 +340,14 @@ object Bench {
     // run; the old sum-of-tier-spans stays beside it for comparability
     // with pre-r18 artifacts (where the two were equal)
     val stagingSec = if (staging.isEmpty) 0.0 else stagingWallSec
-    val stagingTierSum = staging.map(_._2).sum
+    val stagingTierSum = staging.map(_.sec).sum
     // uniform per-tier shape — {"sec":N,"m":[...]} with optional "err" —
     // so artifact consumers parse one shape instead of type-switching on
     // bare-number-or-object (a failed tier was easy to misparse as 0 s)
     val stagingJson = staging
-      .map {
-        case (k, v, None, m, c)    =>
-          s"\"" + k + s"""\":{"sec":${r3(v)},"m":${metricRec(m)},"cache":"${esc(c)}"}"""
-        case (k, v, Some(e), m, c) =>
-          s"\"" + k + s"""\":{"sec":${r3(v)},"m":${metricRec(m)},"cache":"${esc(c)}","err":"${esc(e)}"}"""
+      .map { t =>
+        val err = t.err.map(e => s""","err":"${esc(e)}"""").getOrElse("")
+        s"\"" + t.name + s"""\":{"sec":${r3(t.sec)},"m":${metricRec(t.m)},"cache":"${esc(t.cache)}"$err}"""
       }
       .mkString("{", ",", "}")
     // execution order as an array: position-dependent effects (first-
@@ -488,7 +363,7 @@ object Bench {
     val fingerprint =
       try graft.operators.StageCache.fingerprint(sfDir)
       catch { case _: Throwable => "unavailable" }
-    val mfJson = metricFields.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val mfJson = EngineListener.Fields.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":$js,"runs_all":$ra,"exec_metric_fields":$mfJson,"exec_metrics":$em,"order":$orderJson,"staging":$stagingJson,"staging_sec":${r3(stagingSec)},"staging_tier_sum_sec":${r3(stagingTierSum)},"runs":$runs,"errors":$errCount,"sf":"$sfDir","testdata_fingerprint":"$fingerprint"}"""
     // The full line (~5 KB at 95 queries) overflows the driver's stdout

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.EngineListener
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only stage-timing probe (not part of the graded surface). */
@@ -7,50 +8,20 @@ object DevProbe {
 
   /** Probe-scoped executor metrics (VERDICT r12 item 8): the XL scale
     * records were wall-only, so a 30×/100× claim carried no GC/spill/
-    * shuffle attribution while the bench's per-query records did. Same
-    * mechanism as Bench.M — monotonic task-metric sums off the listener
-    * bus, drained at each snapshot so a probe's bytes land in its own
-    * window. Installed by [[main]]; ad-hoc `t()` callers without a
-    * listener just see zero deltas. */
-  private object PM {
-    import java.util.concurrent.atomic.AtomicLong
-    val shufR = new AtomicLong(0L)
-    val shufW = new AtomicLong(0L)
-    val spillM = new AtomicLong(0L)
-    val spillD = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    @volatile var sc: org.apache.spark.SparkContext = null
-    def install(spark: SparkSession): Unit = {
-      sc = spark.sparkContext
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val tm = te.taskMetrics
-          if (tm != null) {
-            shufR.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-            shufW.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-            spillM.addAndGet(tm.memoryBytesSpilled)
-            spillD.addAndGet(tm.diskBytesSpilled)
-            gcMs.addAndGet(tm.jvmGCTime)
-            ()
-          }
-        }
-      })
-    }
-    def snapshot(): Array[Long] = {
-      val c = sc
-      if (c != null) org.apache.spark.GraftCoreBridge.drainListenerBus(c)
-      Array(shufR.get, shufW.get, spillM.get, spillD.get, gcMs.get)
-    }
-  }
+    * shuffle attribution while the bench's per-query records did.
+    * Attached by [[main]]; ad-hoc `t()` callers without it just see zero
+    * deltas. */
+  @volatile private var metrics: Option[EngineListener] = None
 
   def t[A](name: String)(f: => A): A = {
-    val m0 = PM.snapshot()
+    def snap() = metrics.fold(EngineListener.zero)(_.snapshot())
+    val m0 = snap()
     val t0 = System.nanoTime()
     val r = f
     val sec = (System.nanoTime() - t0) / 1e9
-    val m = PM.snapshot().zip(m0).map { case (a, b) => a - b }
-    def mb(x: Long) = x / 1048576.0
-    println(f"PROBE $name%-28s $sec%8.2f s  m=[shufR=${mb(m(0))}%.1fMB shufW=${mb(m(1))}%.1fMB spillM=${mb(m(2))}%.1fMB spillD=${mb(m(3))}%.1fMB gc=${m(4)}ms]")
+    val m = EngineListener.Fields.zip(EngineListener.formatted(EngineListener.delta(snap(), m0)))
+      .map { case (k, v) => s"$k=$v" }
+    println(f"PROBE $name%-28s $sec%8.2f s  m=${m.mkString("[", " ", "]")}")
     r
   }
 
@@ -274,15 +245,8 @@ object DevProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    PM.install(spark)
+    val spark = GraftSession.build()
+    metrics = Some(EngineListener.attach(spark))
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo

@@ -5,14 +5,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extensions registering graft's native expressions for SQL use:
-  *
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *     ...
-  *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
-  * }}}
+/** Session extensions registering graft's native expressions for SQL use.
+  * [[GraftSession]] installs them; any other session sets
+  * `spark.sql.extensions=graft.GraftExtensions` and can then run
+  * `SELECT cosine_sim(a.embedding, b.embedding) ...`.
   *
   * DataFrame callers don't need the registration —
   * [[graft.similarity.VectorOps.cosineNative]] builds the expression

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.obs.EngineListener
 
 /** Dev tool: run one declared query and print every Spark job it
   * submits — description/call site, wall, stage/task counts — so a
@@ -16,45 +15,13 @@ object JobTrace {
     val name = args.headOption.getOrElse(sys.error("usage: JobTrace <query> [runs]"))
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     graft.operators.StageCache.enableDefault()
-
-    final case class J(id: Int, t0: Long, desc: String, site: String,
-                       stages: Int, tasks: Int)
-    val live = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val site = js.stageInfos.lastOption.map(_.name).getOrElse("")
-        live.put(js.jobId, J(js.jobId, System.nanoTime(), desc, site,
-          js.stageInfos.size, js.stageInfos.map(_.numTasks).sum))
-        ()
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        val j = live.remove(je.jobId)
-        if (j != null) {
-          val ms = (System.nanoTime() - j.t0) / 1e6
-          out.add(f"  job ${j.id}%4d ${ms}%8.1f ms stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.site.take(50)}%-50s ${j.desc.take(80)}")
-          ()
-        }
-      }
-    })
+    val metrics = EngineListener.attach(spark)
 
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
     (1 to runs).foreach { r =>
-      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-      out.clear()
+      metrics.drainJobs()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -62,11 +29,13 @@ object JobTrace {
       df.queryExecution.executedPlan
       val t2 = System.nanoTime()
       val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-      println(f"== run $r: $name rows=$n wall=$sec%.3f s jobs=${out.size} " +
-        f"construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(System.nanoTime() - t2) / 1e9}%.3f")
-      out.forEach(s => println(s))
+      val t3 = System.nanoTime()
+      val jobs = metrics.drainJobs()
+      println(f"== run $r: $name rows=$n wall=${(t3 - t0) / 1e9}%.3f s jobs=${jobs.size} " +
+        f"construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f")
+      jobs.foreach { j =>
+        println(f"  job ${j.id}%4d ${j.ms}%8d ms stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.site.take(50)}%-50s ${j.description.take(80)}")
+      }
     }
     spark.stop()
   }

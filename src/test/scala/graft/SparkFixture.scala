@@ -12,19 +12,9 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  // one shared session across all suites: sbt test forks a single JVM
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as the Verify/Bench sessions, so specs exercise
-      // the session shape the driver grades (parser, strategy, rules)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // one shared session across all suites: sbt test forks a single JVM.
+  // Built by the mains' factory, so specs exercise the session shape
+  // Verify and Bench run (parser, strategy, rules); GraftSessionSpec
+  // checks it.
+  lazy val session: SparkSession = GraftSession.build(4)
 }

@@ -71,6 +71,10 @@ def main(sf_dir, out_dir):
                 i = neq[c].idxmax()
                 print(f"        {c}[{i}]: got={g[c][i]!r} want={w[c][i]!r}")
             n_fail += 1
+    # a query Verify could not build leaves no dir, only this record
+    errs = f"{out_dir}/verify_errors.json"
+    for name, err in sorted((json.load(open(errs)) if os.path.exists(errs) else {}).items()):
+        print(f"[ERR ] {name}: Verify failed: {err}"); n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
